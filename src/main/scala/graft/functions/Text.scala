@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSql
+
+import graft.plans.WhitespaceTokens
 
 /** Text primitives shared by the word-score flagship and the text-analysis
   * operators.
@@ -9,21 +12,14 @@ import org.apache.spark.sql.functions._
   * Tokenization reproduces the reference's `java.util.StringTokenizer`
   * defaults (reference `ComputeWordScore.java:116-120`): delimiters are
   * exactly {space, \t, \n, \r, \f}, empty tokens are never emitted, and
-  * there is NO case folding or punctuation stripping.
-  *
-  * `split` on the delimiter-class regex can produce ONE leading empty
-  * string (when the text starts with a delimiter) and — unlike
-  * StringTokenizer — a trailing empty string is already suppressed by
-  * Java's split semantics only for trailing case; we therefore filter
-  * empties explicitly after exploding. Everything here stays inside
-  * whole-stage codegen (built-in functions only).
+  * there is NO case folding or punctuation stripping. It is one
+  * codegen'd byte scan per row ([[graft.plans.WhitespaceTokens]]): no
+  * regex and no lambda, so tokenizing never by itself takes an operator
+  * out of whole-stage codegen.
   */
 object Text {
 
-  /** Regex class matching StringTokenizer's default delimiters. */
-  val DelimRegex = "[ \\t\\n\\r\\f]+"
-
-  /** DuckDB-side equivalent used in oracle SQL (same RE2 pattern). */
+  /** DuckDB-side delimiter class used in oracle SQL (RE2 pattern). */
   val DelimRegexSql = "[ \\t\\n\\r\\f]+"
 
   /** DuckDB fragment producing the same empty-filtered token list as
@@ -41,12 +37,11 @@ object Text {
   def gramConcatSql(toks: String, idx: String, n: Int): String =
     (0 until n).map(k => s"$toks[$idx+$k]").mkString(" || ' ' || ")
 
-  /** `text` → array<string> of tokens, empties removed.
-    * filter(..) is a higher-order function, codegen-friendly, and keeps
-    * the empty-drop INSIDE the array (no row explosion needed first).
+  /** `text` → array<string> of its non-empty tokens (NULL for NULL
+    * text): one scan of the UTF-8 bytes for the five delimiters.
     */
   def tokens(text: Column): Column =
-    filter(split(text, DelimRegex), t => length(t) > 0)
+    GraftSql.column(WhitespaceTokens(GraftSql.expression(text)))
 
   /** One row per token. Use after selecting the carry-along columns. */
   def explodedWord(text: Column): Column = explode(tokens(text))

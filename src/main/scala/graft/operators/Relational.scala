@@ -867,22 +867,6 @@ object Relational {
       .orderBy("l_suppkey", "ship_day")
   }
 
-  /** The literal RANGE-interval-frame plan (previous implementation),
-    * kept for the A/B attribution in docs/PLANS.md.
-    */
-  private[graft] def qWindowRangeFrameViaRange(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d).createOrReplaceTempView("lineitem_v")
-    s.sql(s"""
-      WITH daily AS (
-        SELECT l_suppkey, CAST(l_shipdate AS DATE) AS ship_day,
-          CAST(SUM($REV_SQL) AS DECIMAL(18,4)) AS day_rev
-        FROM lineitem_v GROUP BY 1, 2)
-      SELECT l_suppkey, ship_day,
-        CAST(SUM(day_rev) OVER (PARTITION BY l_suppkey ORDER BY ship_day
-          RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE) AS rev_7d
-      FROM daily ORDER BY l_suppkey, ship_day""")
-  }
-
   val qWindowRangeFrameSql: String =
     s"""WITH daily AS (
        |  SELECT l_suppkey, CAST(l_shipdate AS DATE) AS ship_day,

@@ -414,26 +414,17 @@ object Similarity {
   val LshPlanes = 8     // sign-random-projection hyperplanes
   val LshBands = 2      // 2 bands × 4 bits → 16 buckets per band
 
-  /** Signed projection of `emb` onto deterministic ±1 hyperplane j —
-    * the weights come from pure integer arithmetic (a Knuth-style
+  /** Signed projection of `embedding` onto deterministic ±1 hyperplane
+    * j — the weights come from pure integer arithmetic (a Knuth-style
     * multiplicative mix mod 97), so both engines derive bit-identical
-    * planes with no lookup table and no crypto in the per-row loop.
+    * planes with no lookup table and no crypto in the per-row loop
+    * (the Spark side is graft.plans.SignBands).
     */
-  private def planeDot(emb: Column, j: Int): Column =
-    aggregate(sequence(lit(1), lit(64)), lit(0.0), (acc, i) =>
-      acc + element_at(emb, i).cast("double") *
-        when(pmod(pmod(i.cast("long") * 2654435761L + lit(j * 40503L), lit(97L)), lit(2L)) === 0,
-          lit(1.0)).otherwise(lit(-1.0)))
-
   private def planeDotSql(j: Int): String =
     s"""list_reduce(list_transform(range(1, 65), i ->
        |        CAST(embedding[i] AS DOUBLE) *
        |        (CASE WHEN ((i * 2654435761 + ${j * 40503}) % 97) % 2 = 0
        |              THEN 1.0 ELSE -1.0 END)), (a, b) -> a + b)""".stripMargin
-
-  private def bandBucket(emb: Column, b: Int): Column =
-    concat((4 * b until 4 * b + 4).map(j =>
-      when(planeDot(emb, j) >= 0, "1").otherwise("0")): _*)
 
   private def bandBucketSql(b: Int): String =
     (4 * b until 4 * b + 4).map(j =>

@@ -10,15 +10,6 @@ import org.apache.spark.sql.graft.GraftSql
 class CharStatsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def statsOf(texts: String*): Seq[(Int, Int, Long, Int)] =
     texts.toDF("text")
       .select(explode(array(GraftSql.charStats(col("text")))).as("cs"))

@@ -38,19 +38,23 @@ trait SparkSpec extends AnyFunSuite {
     (out, perStage.asScala.map { case (s, q) => s -> q.asScala.toSeq }.toMap)
   }
 
-  /** Scope AQE partition coalescing off (it legitimately re-merges
-    * small even shares and muddies balance measurements), restoring
-    * the previous setting after.
+  /** Run `body` with the given session confs set, restoring each
+    * previous value (or unsetting it) after.
     */
-  def withoutCoalescing[T](body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  def withSQLConf[T](pairs: (String, String)*)(body: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Scope AQE partition coalescing off (it legitimately re-merges
+    * small even shares and muddies balance measurements).
+    */
+  def withoutCoalescing[T](body: => T): T =
+    withSQLConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 }
 
 object SparkSpec {

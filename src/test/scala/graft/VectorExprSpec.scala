@@ -180,15 +180,6 @@ class VectorExprSpec extends SparkSpec {
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { check() }
   }
 
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("sparse_dot == exploded decimal join-aggregate, bit-exact, on fixture docs") {
     import org.apache.spark.sql.graft.GraftSql
     import org.apache.spark.sql.types.DecimalType

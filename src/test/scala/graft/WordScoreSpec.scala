@@ -2,12 +2,17 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, StringSplit}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.functions.Text
-import graft.operators.WordScore
+import graft.operators.{TextAnalysis, WordScore}
+import graft.plans.WhitespaceTokens
 import graft.sources.{ReviewSource, TsvSink}
 
 /** Reference-semantics tests (golden corpus from FIXTURES.md §A) and
@@ -58,20 +63,68 @@ class WordScoreSpec extends SparkSpec {
     assert(scores.sameElements(scores.sortBy(-_)))
   }
 
+  /** The regex tokenizer [[Text.tokens]] used before the byte scan,
+    * kept here only as a differential oracle.
+    */
+  private def regexTokens(text: Column): Column =
+    filter(split(text, "[ \\t\\n\\r\\f]+"), t => length(t) > 0)
+
+  /** Every operator of `df`'s executed plan, through adaptive plans
+    * and subqueries.
+    */
+  private def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    object walk extends AdaptiveSparkPlanHelper
+    walk.collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  private def expressionsOf(nodes: Seq[SparkPlan]): Seq[Expression] =
+    nodes.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+
   test("tokenizer parity with java.util.StringTokenizer (property)") {
     val genText: Gen[String] =
       Gen.listOf(Gen.oneOf(Gen.alphaNumStr.suchThat(_.nonEmpty),
         Gen.oneOf(" ", "\t", "\n", "\r", "\f", "  ", " \t"),
-        Gen.const("a.b,c!"))).map(_.mkString)
-    // 500 deterministic samples, checked in ONE Spark job.
-    val samples = (1 to 500).flatMap(i =>
-      genText.apply(Gen.Parameters.default, Seed(i.toLong))).distinct
-    val got = samples.toDF("text")
-      .select(col("text"), Text.tokens(col("text")).as("t"))
-      .as[(String, Seq[String])].collect().toMap
-    samples.foreach { s =>
-      assert(got(s).toList === stringTokenizerTokens(s), s"input=${s.replace("\n","\\n")}")
+        Gen.const("a.b,c!"),
+        // 2-, 3- and 4-byte UTF-8
+        Gen.oneOf("é", "日本語", "\ud83d\ude00", "naïve"),
+        // Unicode whitespace that is NOT a StringTokenizer delimiter
+        Gen.oneOf("\u00a0", "\u2003", "\u3000", "\u000b", "\u001c",
+          "\u001d", "\u001e", "\u001f", "\u0085"))).map(_.mkString)
+    val edges = Seq("", " ", " \t\n\r\f ", "\t\tlead", "trail\r\n\f ",
+      "  both  ", "\u00a0", "a\u000bb", "\ud83d\ude00 \ud83d\ude00")
+    // 500 deterministic samples plus the edges and NULL, checked in ONE job
+    val samples = (edges ++ (1 to 500).flatMap(i =>
+      genText.apply(Gen.Parameters.default, Seed(i.toLong)))).distinct :+ null
+    // RDD-backed, so the projection runs in the executor: the optimizer
+    // would fold the same projection over a local Seq at plan time.
+    // Collect keeps the input order, so row i is samples(i).
+    def tokenized(tokens: Column => Column): DataFrame =
+      spark.sparkContext.parallelize(samples, 4).toDF("text")
+        .select(tokens(col("text")))
+    val regex = tokenized(regexTokens).as[Seq[String]].collect()
+    def run(codegen: Boolean): Unit = {
+      val df = tokenized(Text.tokens)
+      val got = df.as[Seq[String]].collect()
+      // the byte scan runs inside a whole-stage stage exactly when codegen
+      // is on (the regex oracle, a CodegenFallback, would keep it out)
+      val staged = executedNodes(df).collect { case w: WholeStageCodegenExec => w }
+      assert(expressionsOf(staged.flatMap(_.child.collect { case p => p }))
+        .exists(_.isInstanceOf[WhitespaceTokens]) === codegen)
+      assert(got.length === samples.length)
+      samples.indices.foreach { i =>
+        val s = samples(i)
+        val shown = Option(s).map(_.flatMap {
+          case c if c < ' ' || c > '~' => f"\\u${c.toInt}%04x"
+          case c => c.toString
+        }).orNull
+        assert(got(i) === regex(i), s"vs regex split, input=$shown codegen=$codegen")
+        if (s != null) assert(got(i).toList === stringTokenizerTokens(s),
+          s"vs StringTokenizer, input=$shown codegen=$codegen")
+      }
     }
+    run(codegen = true)
+    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { run(codegen = false) }
   }
 
   test("permutation invariance: shuffling input rows never changes scores") {
@@ -115,6 +168,18 @@ class WordScoreSpec extends SparkSpec {
     val out = WordScore.score(bad, col("stars"), col("text"))
       .as[(String, Long)].collect().toMap
     assert(out === Map("fine" -> 2L, "words" -> 2L))
+  }
+
+  test("plan guard: tokenizing runs no regex split and no lambda") {
+    // WordScore.flagship is WordScore.score over the documents fixture
+    for (df <- Seq(WordScore.flagship(Tables.documents(spark, sf)),
+                   TextAnalysis.tMapOps(spark, sf))) {
+      df.collect()
+      val es = expressionsOf(executedNodes(df))
+      assert(es.exists(_.isInstanceOf[WhitespaceTokens]))
+      assert(!es.exists(e => e.isInstanceOf[StringSplit] || e.isInstanceOf[LambdaFunction]),
+        df.queryExecution.executedPlan.treeString)
+    }
   }
 
   test("malformed JSON fails fast like the reference") {
